@@ -117,9 +117,9 @@ object Bench {
     // meters cover the WHOLE QueryDef — for the lake queries that
     // includes the in-query fixture write — so they detect deltas
     // (fixture cost is constant run-to-run) rather than isolate the
-    // scan; the isolated pruned-scan byte evidence lives in the
-    // rehearsal drivers (RehearsalR11.metered), which measure the scan
-    // alone on a prebuilt lake.
+    // scan; the isolated pruned-scan byte evidence (the scan alone on a
+    // prebuilt lake, bytes opened rather than wall time) is recorded in
+    // SURVEY.md §7.3.1, Round 11.
     val meterSet = Seq("l06_lake_pruned_read", "l13_lake_bloom_eq",
       "l14_lake_semi_join", "l15_lake_dsv2_scan", "l16_lake_semi_join_multi",
       "l18_lake_dsv2_runtime_prune", "l19_lake_dsv2_agg_pushdown",

@@ -16,8 +16,8 @@ package graft
   * that losing a prune/pushdown (a 10–100× byte jump, see
   * BenchGatesSpec's deliberate plan-break) cannot pass. The meters
   * cover the WHOLE QueryDef — fixture writes included — so these are
-  * regression tripwires, not isolated-scan measurements (those live in
-  * the rehearsal drivers). */
+  * regression tripwires, not isolated-scan measurements (those are
+  * recorded in SURVEY.md §7.3.1 and pinned by the lake specs). */
 object BenchGates {
 
   final case class Ceiling(maxInputBytes: Option[Long] = None,
@@ -162,9 +162,9 @@ object BenchGates {
     "l46_lake_recluster" -> Ceiling(Some(60 * MB), None,
       maxStoreOps = Some(600)),
     // 4.0 MB in / 11.4 MB shuffled / ~588 store RPCs (round 20): the
-    // rollback itself is ~40 RPCs and ZERO data bytes (RehearsalR20,
-    // flat at 100x) — the meter here is fixture + three DMLs + two
-    // rollbacks + the four exceptAll equivalence gates. A rollback that
+    // rollback itself is ~40 RPCs and ZERO data bytes, flat at 8x the
+    // objects (LakeRollbackSpec) — the meter here is fixture + three DMLs
+    // + two rollbacks + the four exceptAll equivalence gates. A rollback that
     // rewrote data (instead of re-pointing the chain) or a time-travel
     // read that lost key resolution multiplies input and RPCs together
     "l47_lake_rollback" -> Ceiling(Some(12 * MB), Some(40 * MB),

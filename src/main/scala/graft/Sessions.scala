@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   * cluster this would be executors×cores×2-3; AQE coalesces down from
   * there), UTC session time for oracle parity, nanos-as-long so the events
   * table's TIMESTAMP(NANOS) parquet is readable.
+  *
+  * The builder installs [[GraftExtensions]] — the engine's SQL functions
+  * and its two advisory optimizer rules — through `withExtensions`, the
+  * same path `spark.sql.extensions=graft.GraftExtensions` takes on a
+  * cluster. Extensions belong to the session's build, so every child of
+  * a built session (`newSession()`) carries them too.
   */
 object Sessions {
   def builder(cpus: String): SparkSession.Builder =
@@ -28,18 +34,11 @@ object Sessions {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+      .withExtensions(new GraftExtensions)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the engine's advisory optimizer rules (see GraftExtensions for the
-    // declarative path); idempotent across getOrCreate reuse
-    val rules = Seq(org.apache.spark.sql.graft.StreamLakePrune,
-      org.apache.spark.sql.graft.ZOrderWriteLayout)
-    val missing = rules.filterNot(spark.experimental.extraOptimizations.contains)
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ missing
     spark
   }
 }

@@ -629,7 +629,7 @@ final class LakeWriteBuilder(rootUri: String, lakeSchema: TableSchema,
       clusterBy,
       Option(options.get("writepartitions")).map(_.toInt).getOrElse(0),
       Option(options.get("sinkid")).getOrElse(queryId),
-      zorderBy, overwriteMode, auditId)
+      overwriteMode, auditId)
   }
 }
 
@@ -649,7 +649,6 @@ final class LakeWrite(rootUri: String, lakeSchema: TableSchema,
                       bloomColumns: Seq[String],
                       clusterBy: Seq[String] = Nil, writePartitions: Int = 0,
                       sinkId: String = "",
-                      zorderBy: Option[(String, String)] = None,
                       overwriteMode: Option[LakeRowLevel.OverwriteMode] = None,
                       // WRITE-AUDIT-PUBLISH: land the batch INVISIBLY
                       // behind a named audit intent — readers exclude
@@ -664,14 +663,6 @@ final class LakeWrite(rootUri: String, lakeSchema: TableSchema,
   // table's sidecar convention) — the commit's renames must follow it
   @volatile private var effectivePolicy: LakeRowLevel.SidecarPolicy =
     LakeRowLevel.SidecarPolicy(gzip, zoneMaps, bloomColumns)
-
-  /** `option("clusterBy", "zorder(a,b)")` — the two-column Morton write
-    * layout, consumed by the ZOrderWriteLayout optimizer rule (see
-    * [[requiredDistribution]] for why Spark's own distribution machinery
-    * cannot express it). Exposes the requested columns and partition
-    * count to the rule. */
-  def zorderColumns: Option[(String, String)] = zorderBy
-  def zorderPartitions: Int = writePartitions
 
   override def toStreaming
       : org.apache.spark.sql.connector.write.streaming.StreamingWrite =

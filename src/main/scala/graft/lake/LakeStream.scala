@@ -132,8 +132,8 @@ final class LakeMicroBatchStream(rootUri: String, table: String,
   }
 
   // advisory meter: objects dropped by sidecar probes at plan time
-  // (cumulative over planInputPartitions calls; specs and rehearsals read
-  // it, the protocol never does)
+  // (cumulative over planInputPartitions calls; specs read it, the
+  // protocol never does)
   @volatile private var prunedCount: Long = 0L
   def objectsPruned: Long = prunedCount
 

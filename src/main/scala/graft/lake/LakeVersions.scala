@@ -637,8 +637,8 @@ object LakeVersions {
   // ------------------------------------------------------------ commit
 
   /** Test seam: runs immediately before each CAS attempt (after
-    * validation) — specs and the rehearsal driver use it to interleave
-    * two writers deterministically. Never set outside tests. */
+    * validation) — specs use it to interleave two writers
+    * deterministically. Never set outside tests. */
   @volatile private[graft] var beforeCasHook: String => Unit = _ => ()
 
   /** How long a writer waits before reclaiming a TORN head-gen slot

@@ -2124,9 +2124,9 @@ object Pipeline {
     // substring of the other key) instead of q-gram prefixes. Measured
     // on this corpus's tiny word vocabulary at sf0.1: 61k candidates at
     // k=2 (109k before the multi-match-aware start-window selection —
-    // RehearsalR10 measures both) where the q-gram index (q=4)
-    // generates 545k — exact-substring matching stays selective where
-    // short grams go viral. The oracle is
+    // SURVEY.md §7.3.1, Round 10 records both) where the q-gram index
+    // (q=4) generates 545k — exact-substring matching stays selective
+    // where short grams go viral. The oracle is
     // e02's full-quadratic recursive CTE verbatim: hash-exactness proves
     // THIS generator, too, produces every true candidate.
     "e03_entity_canonical_segment" -> QueryDef(
@@ -3893,7 +3893,7 @@ object Pipeline {
             zoneMaps = true)
         // root-HASHED catalog name: Spark caches the catalog INSTANCE at
         // first use, so a fixed name would pin the warm-up run's root for
-        // the whole JVM (TimeQuery warms at sf0.001, then times sf0.1)
+        // the whole JVM (Bench warms at sf0.001, then times sf0.1)
         val cat = s"l29cat${math.abs(root.hashCode)}"
         s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -3951,7 +3951,7 @@ object Pipeline {
             zoneMaps = true)
         // root-HASHED catalog name: Spark caches the catalog INSTANCE at
         // first use, so a fixed name would pin the warm-up run's root for
-        // the whole JVM (TimeQuery warms at sf0.001, then times sf0.1)
+        // the whole JVM (Bench warms at sf0.001, then times sf0.1)
         val cat = s"l30cat${math.abs(root.hashCode)}"
         s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -4005,7 +4005,7 @@ object Pipeline {
           zoneMaps = true)
         // root-HASHED catalog name: Spark caches the catalog INSTANCE at
         // first use, so a fixed name would pin the warm-up run's root for
-        // the whole JVM (TimeQuery warms at sf0.001, then times sf0.1)
+        // the whole JVM (Bench warms at sf0.001, then times sf0.1)
         val cat = s"l31cat${math.abs(root.hashCode)}"
         s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
         s.conf.set(s"spark.sql.catalog.$cat.root", root)

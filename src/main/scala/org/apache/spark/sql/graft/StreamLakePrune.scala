@@ -18,9 +18,10 @@ import org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRe
   * object in the window. This rule closes that gap from the other side:
   * it matches `Filter` directly above a lake
   * [[StreamingDataSourceV2ScanRelation]] in the PER-MICRO-BATCH
-  * optimized plan (`IncrementalExecution` re-optimizes every trigger, and
-  * `PushDownPredicates` has already pushed deterministic conjuncts down
-  * to the relation by the time user-provided rules run), translates the
+  * optimized plan (`IncrementalExecution` re-optimizes every trigger; the
+  * rule runs in the operator optimization batches after
+  * `PushDownPredicates`, so the last delivery sees deterministic conjuncts
+  * pushed down to the relation), translates the
   * conjuncts to `sources.Filter`s, and hands them to
   * [[LakeMicroBatchStream.deliverFilters]].
   *
@@ -35,7 +36,7 @@ import org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRe
   * that one branch still needs — the exact hazard that keeps Spark
   * itself from pushing filters into streaming sources. Multi-occurrence
   * plans simply read unpruned, row-level filters intact. Registered by
-  * `graft.GraftExtensions` and `graft.Sessions.local`.
+  * `graft.GraftExtensions`, the one path every engine session takes.
   */
 object StreamLakePrune extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = {

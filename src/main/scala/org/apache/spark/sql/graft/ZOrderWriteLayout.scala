@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import graft.lake.{LakeDataSource, LakeTable, LakeWrite}
+import graft.lake.{LakeDataSource, LakeTable}
 
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Cast, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{AppendData, LogicalPlan, RepartitionByExpression, Sort}
@@ -25,17 +25,15 @@ import org.apache.spark.sql.types.LongType
   * [[exprs.ZInterleave]]. `writePartitions` caps the exchange's
   * partition count (≈ object count).
   *
-  * The z-request is read from EITHER face, because the two registration
-  * paths see the plan at different times: the built [[LakeWrite]]
-  * (`Sessions.local`'s extraOptimizations — the "User Provided
-  * Optimizers" batch runs after `V2Writes`) or the lake relation's raw
-  * options (`spark.sql.extensions` — injected operator rules run BEFORE
-  * `V2Writes`, when `AppendData.write` is still None). Advisory and
-  * idempotent: the rewrite fires once (guarded by the z-sort already on
-  * the query) and never changes WHAT is written, only the row→task
-  * layout. Registered by `graft.GraftExtensions` and
-  * `graft.Sessions.local`; without the rule the option degrades to an
-  * unclustered write (documented on the option), never a wrong one. */
+  * The z-request is read off the lake relation's raw write options:
+  * [[graft.GraftExtensions]] injects this rule into the operator
+  * optimization batches, which run BEFORE `V2Writes` builds the
+  * `LakeWrite` (full option validation still happens in
+  * `LakeWriteBuilder`). Advisory and idempotent: the rewrite fires once
+  * (guarded by the z-sort already on the query) and never changes WHAT is
+  * written, only the row→task layout. Without the rule the option
+  * degrades to an unclustered write (documented on the option), never a
+  * wrong one. */
 object ZOrderWriteLayout extends Rule[LogicalPlan] {
 
   private def zSort(q: LogicalPlan): Boolean = q match {
@@ -44,30 +42,18 @@ object ZOrderWriteLayout extends Rule[LogicalPlan] {
   }
 
   /** (colA, colB, writePartitions) when this append asks for a z-layout. */
-  private def zRequest(a: AppendData): Option[(String, String, Int)] = {
-    def opt(name: String): Option[String] =
-      a.writeOptions.collectFirst {
-        case (k, v) if k.equalsIgnoreCase(name) => v
-      }.orElse(a.table match {
-        case r: DataSourceV2Relation => Option(r.options.get(name.toLowerCase))
-        case _ => None
-      })
-    a.write match {
-      case Some(w: LakeWrite) =>
-        w.zorderColumns.map { case (x, y) => (x, y, w.zorderPartitions) }
-      case Some(_) => None // some other sink's write: not ours
-      case None => a.table match {
-        // pre-V2Writes (the extensions registration): the write is not
-        // built yet — read the request straight off the lake relation's
-        // options (full validation still happens in LakeWriteBuilder)
-        case r: DataSourceV2Relation if r.table.isInstanceOf[LakeTable] =>
-          LakeDataSource.parseClusterBy(opt("clusterBy"))._2.map {
-            case (x, y) => (x, y, opt("writePartitions").map(_.toInt).getOrElse(0))
-          }
-        case _ => None
-      }
+  private def zRequest(a: AppendData): Option[(String, String, Int)] =
+    a.table match {
+      case r: DataSourceV2Relation if r.table.isInstanceOf[LakeTable] =>
+        def opt(name: String): Option[String] =
+          a.writeOptions.collectFirst {
+            case (k, v) if k.equalsIgnoreCase(name) => v
+          }.orElse(Option(r.options.get(name.toLowerCase)))
+        LakeDataSource.parseClusterBy(opt("clusterBy"))._2.map {
+          case (x, y) => (x, y, opt("writePartitions").map(_.toInt).getOrElse(0))
+        }
+      case _ => None
     }
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case a: AppendData if !zSort(a.query) && zRequest(a).isDefined =>

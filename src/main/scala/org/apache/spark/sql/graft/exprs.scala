@@ -389,9 +389,9 @@ object exprs {
   }
 
   /** The single SQL function registry — (name, usage, builder) — consumed
-    * by both [[register]] (imperative, existing session) and
-    * [[graft.GraftExtensions]] (`spark.sql.extensions`), so the two
-    * surfaces cannot drift. Int/long parameters must be foldable literals
+    * by [[graft.GraftExtensions]] (every `graft.Sessions` session, or
+    * `spark.sql.extensions` on a cluster) and by [[register]] (a session
+    * built elsewhere), so the two surfaces cannot drift. Int/long parameters must be foldable literals
     * (they parameterize codegen). */
   val functionBuilders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("rolling_hash", "rolling_hash(str) - SQL-reproducible document fingerprint",

@@ -281,4 +281,37 @@ class LakeCdfSpec extends SparkSuite {
       .map(m => Option(m.getMessage).getOrElse("")).mkString(" | ")
     assert(m.contains("set_retention"), s"remedy must be named: $m")
   }
+
+  test("a CDF drain costs O(changed objects): 8x the objects pays the same store RPCs and input bytes") {
+    // two lakes with the SAME 250-row objects over four hours: 8 objects
+    // and 64. Each takes the same small commit (a COW UPDATE confined to
+    // hour 0's first object), and the meter isolates the drain of exactly
+    // that commit: input ≈ the retired original + its rewrite, RPCs ≈
+    // chain walk + hour listings + the pair of opens with their sidecars
+    def drainCost(objectsPerHour: Int): (Long, graft.Meter.Metrics) = {
+      val (cat, root, store) = fixture()
+      val perHour = objectsPerHour * 250
+      for (h <- 0 until 4)
+        land(root, hour = f"2024-07-01T0$h%d:00:00Z", lo = h * perHour, n = perHour)
+      val objects = LakeReader.listTableKeys(store, "ct", None).size
+      assert(objects == 4 * objectsPerHour)
+      retainOn(cat)                                                // gen 1
+      spark.sql(s"UPDATE $cat.ct SET vc = -1 WHERE id < 100")      // gen 2
+      val (batches, m) = graft.Meter.measure(spark) {
+        drain(root, freshCkpt(), Map("startingVersion" -> "1"))
+      }
+      try assert(batches.map(_.count()).sum == 200L, // 100 deletes + 100 inserts
+        "the drain must deliver exactly the commit's change")
+      finally batches.foreach(_.unpersist())
+      (objects, m)
+    }
+    val (objsS, small) = drainCost(2)
+    val (objsL, large) = drainCost(16)
+    assert(small.inputBytes > 0L)
+    assert(large.inputBytes <= small.inputBytes * 3 / 2 &&
+      large.storeOps <= small.storeOps + 4 && large.storeOps < 200,
+      s"CDF per-commit cost must be O(changed objects), flat in table size: " +
+        s"$objsS objects=(${small.storeOps} RPCs, ${small.inputBytes} B), " +
+        s"$objsL objects=(${large.storeOps} RPCs, ${large.inputBytes} B)")
+  }
 }

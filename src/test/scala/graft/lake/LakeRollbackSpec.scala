@@ -381,4 +381,40 @@ class LakeRollbackSpec extends SparkSuite {
     // a FRESH stream reads the rolled-back state in full
     assert(drain(freshCkpt()) == 500)
   }
+
+  test("rollback cost is flat in table size: 8x the objects pays the same store RPCs and reads no data object") {
+    // two lakes with the SAME 250-row objects over four hours: 8 objects
+    // and 64. Each takes the same bad commit (a COW DELETE of the newest
+    // 100 ids — a one-object rewrite on both), and the meter isolates the
+    // rollback itself: the chain walk, one listing per hour directory
+    // (never per object), presence probes on the resurrected key, and ONE
+    // record CAS
+    def rollbackCost(objectsPerHour: Int): (Long, graft.Meter.Metrics) = {
+      val (cat, root, store) = fixture()
+      val perHour = objectsPerHour * 250
+      for (h <- 0 until 4)
+        land(root, hour = f"2024-07-01T0$h%d:00:00Z", lo = h * perHour, n = perHour)
+      val objects = LakeReader.listTableKeys(store, "rt", None).size
+      assert(objects == 4 * objectsPerHour)
+      retainOn(cat)                                                // gen 1
+      spark.sql(s"DELETE FROM $cat.rt WHERE id >= ${4 * perHour - 100}") // gen 2
+      def dataKeys = store.list("").filter(k =>
+        LakeKeys.parseKey(k).exists(_._2 == "rt")).sorted
+      val before = dataKeys
+      val (_, m) = graft.Meter.measure(spark) {
+        spark.sql(s"CALL $cat.system.rollback(table => 'rt', " +
+          "version => '1')").collect()
+      }
+      assert(dataKeys == before, "rollback must move zero data objects")
+      assert(spark.table(s"$cat.rt").count() == 4L * perHour)
+      (objects, m)
+    }
+    val (objsS, small) = rollbackCost(2)
+    val (objsL, large) = rollbackCost(16)
+    assert(small.inputBytes == 0L && large.inputBytes == 0L,
+      s"rollback must read no data object: ${small.inputBytes} / ${large.inputBytes} bytes")
+    assert(large.storeOps <= small.storeOps + 4 && large.storeOps < 120,
+      s"rollback store RPCs must be O(changed), flat in table size: " +
+        s"$objsS objects=${small.storeOps}, $objsL objects=${large.storeOps}")
+  }
 }

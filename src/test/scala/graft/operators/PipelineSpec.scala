@@ -188,9 +188,23 @@ class PipelineSpec extends SparkSuite {
     import spark.implicits._
     // two clusters: a 4-chain {1-2, 2-3, 3-4} and a pair {10-11}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
-    val cc = Dedup.connectedComponents(pairs).collect()
+    def labels() = Dedup.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = labels()
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    // spark.graft.materialize=reliable (RDD checkpoints that survive
+    // executor loss) labels the same, through every cut of the
+    // distributed loop (cap 0 forces it)
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(dir.toURI.toString)
+    spark.conf.set("spark.graft.materialize", "reliable")
+    spark.conf.set("spark.graft.cc.localEdgeCap", "0")
+    try assert(labels() == cc)
+    finally {
+      spark.conf.unset("spark.graft.materialize")
+      spark.conf.unset("spark.graft.cc.localEdgeCap")
+      graft.Fs.deleteRecursively(dir)
+    }
   }
 
   test("connected components: diameter-1000 chain converges in O(log d) rounds") {
